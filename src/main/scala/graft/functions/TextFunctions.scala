@@ -7,9 +7,13 @@ import org.apache.spark.sql.functions._
   * tokenization, n-gram shingling, language ID, quality scoring.
   *
   * Everything here is built from `org.apache.spark.sql.functions` higher-order
-  * functions — no UDFs — so the whole stage stays inside Catalyst (column
-  * pruning, codegen where available) and runs as a pure map: no shuffle, which
-  * is what makes these viable over 100 TB of documents.
+  * functions or the Catalyst kernels of [[NativeTextExpressions]] — no UDFs —
+  * so the whole stage stays inside Catalyst (column pruning, codegen where
+  * available) and runs as a pure map: no shuffle, which is what makes these
+  * viable over 100 TB of documents. The kernel-backed builders (`tokenCount`,
+  * `textShingles`, `langId`, `qualityScore`) are session-free columns; their
+  * declarative forms stay as the parity oracles LangProfileParitySpec fuzzes
+  * the kernels against.
   */
 object TextFunctions {
 
@@ -26,23 +30,9 @@ object TextFunctions {
   def bpeishTokens(text: Column): Column =
     regexp_extract_all(text, lit(bpeishPattern), lit(0))
 
+  /** `size(tokens(text))`, from the fused one-pass profile kernel. */
   def tokenCount(text: Column): Column =
-    profileOf(text).map(_.getField("n_tok")).getOrElse(size(tokens(text)))
-
-  /** The thread's active/default session, if any — these column builders
-    * keep their session-free signatures, so native kernels install into
-    * (and must be analyzed under) the session current at COLUMN
-    * CONSTRUCTION time. All registry queries build and run under the one
-    * driver session, which is the supported shape; a column built here and
-    * shipped to a different `newSession()` would not resolve the kernel. */
-  private def currentSession: Option[org.apache.spark.sql.SparkSession] =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-
-  /** The fused one-pass profile struct (NativeTextExpressions.LangProfile)
-    * when a session is resolvable and the kernel installs; None otherwise. */
-  private def profileOf(text: Column): Option[Column] =
-    currentSession.flatMap(s => NativeTextExpressions.langProfile(s)(text))
+    NativeTextExpressions.langProfile(text).getField("n_tok")
 
   /** Word n-gram shingles ("a b c", n=2 → ["a b","b c"]); empty array when
     * the document is shorter than n tokens.
@@ -66,13 +56,11 @@ object TextFunctions {
   }
 
   /** `shingles(tokens(text), n)` served by the native `word_shingles`
-    * kernel when it installs (one pass over the lowered bytes instead of an
-    * interpreted arrays_zip/transform/concat_ws per row), the declarative
-    * form otherwise. Output is position-for-position identical
-    * (LangProfileParitySpec fuzz-pins the equality). */
+    * kernel (one pass over the lowered bytes instead of an interpreted
+    * arrays_zip/transform/concat_ws per row). Output is position-for-
+    * position identical (LangProfileParitySpec fuzz-pins the equality). */
   def textShingles(text: Column, n: Int): Column =
-    currentSession.flatMap(s => NativeTextExpressions.wordShingles(s)(text, n))
-      .getOrElse(shingles(tokens(text), n))
+    NativeTextExpressions.wordShingles(text, n)
 
   // --- language ID (n-gram/stopword heuristic) ------------------------------
 
@@ -92,29 +80,26 @@ object TextFunctions {
     * hits → "unknown"). Pure map-side — no shuffle. */
   def langId(text: Column): Column = langIdWith(text, defaultMarkers)
 
+  /** `markers` must fit the kernel's table (1..31 languages of 1..7-char
+    * lowercase ASCII words); the kernel rejects any other set loudly. */
   def langIdWith(text: Column, markers: Seq[(String, Seq[String])]): Column = {
-    // Default markers: the fused native kernel computes every language's
-    // occurrence count AND the first-max index in one tokenize pass (the
-    // argmax-over-structs form below still paid one interpreted HOF filter
-    // per language per row). `best` already encodes the (score, -index)
-    // tie-break; all-zero counts → -1 → "unknown"; null text → null struct
-    // → both when() conditions null → "unknown", exactly like the
-    // declarative form's null propagation.
-    val native = if (markers == defaultMarkers) profileOf(text) else None
-    native match {
-      case Some(p) =>
-        val names = typedlit(markers.map(_._1))
-        when(p.getField("cjk"), lit("zh"))
-          .otherwise(when(p.getField("best") >= 0,
-            element_at(names, p.getField("best") + 1))
-            .otherwise(lit("unknown")))
-      case None => langIdDeclarative(text, markers)
-    }
+    // The fused native kernel computes every language's occurrence count
+    // AND the first-max index in one tokenize pass (the declarative
+    // argmax-over-structs form paid one interpreted HOF filter per language
+    // per row). `best` already encodes the (score, -index) tie-break;
+    // all-zero counts → -1 → "unknown"; null text → null struct → both
+    // when() conditions null → "unknown", exactly like the declarative
+    // form's null propagation.
+    val p = NativeTextExpressions.langProfile(text, markers)
+    val names = typedlit(markers.map(_._1))
+    when(p.getField("cjk"), lit("zh"))
+      .otherwise(when(p.getField("best") >= 0,
+        element_at(names, p.getField("best") + 1))
+        .otherwise(lit("unknown")))
   }
 
-  /** The pre-kernel declarative langId — the fallback when the native
-    * kernel can't install, and the parity pin LangProfileParitySpec fuzzes
-    * the kernel against. */
+  /** The pre-kernel declarative langId — the parity oracle
+    * LangProfileParitySpec fuzzes the kernel against. */
   private[graft] def langIdDeclarative(text: Column,
       markers: Seq[(String, Seq[String])]): Column = {
     val toks = tokens(text)
@@ -146,24 +131,18 @@ object TextFunctions {
     * stopword density (the reference's medallion "silver" cleanliness idea —
     * clinicdata.sql:174-176 — generalized to web-scale text filtering). */
   def qualityScore(text: Column): Column = {
-    // Same arithmetic over the same values either way; the native path just
-    // sources (n_tok, stopword count, n_punct, n_char) from the fused
-    // one-pass kernel instead of a split + interpreted HOF filter + two
-    // regex passes. In a projection that also computes langId/tokenCount,
-    // codegen subexpression elimination evaluates the kernel once.
-    val (nTokI, swI, punctI, charI) = profileOf(text) match {
-      case Some(p) =>
-        (p.getField("n_tok"), p.getField("s0"),
-          p.getField("n_punct"), p.getField("n_char"))
-      case None =>
-        val toks = tokens(text)
-        (size(toks), stopwordCount(toks), punctCount(text), length(text))
-    }
-    qualityFormula(nTokI, swI, punctI, charI)
+    // Same arithmetic as the declarative form; (n_tok, stopword count,
+    // n_punct, n_char) come from the fused one-pass kernel instead of a
+    // split + interpreted HOF filter + two regex passes. In a projection
+    // that also computes langId/tokenCount, codegen subexpression
+    // elimination evaluates the kernel once.
+    val p = NativeTextExpressions.langProfile(text)
+    qualityFormula(p.getField("n_tok"), p.getField("s0"),
+      p.getField("n_punct"), p.getField("n_char"))
   }
 
-  /** The pre-kernel declarative qualityScore — the fallback's feature
-    * sourcing, kept callable for LangProfileParitySpec's fuzz pin. */
+  /** The pre-kernel declarative qualityScore — the parity oracle
+    * LangProfileParitySpec fuzzes the kernel against. */
   private[graft] def qualityScoreDeclarative(text: Column): Column = {
     val toks = tokens(text)
     qualityFormula(size(toks), stopwordCount(toks), punctCount(text), length(text))

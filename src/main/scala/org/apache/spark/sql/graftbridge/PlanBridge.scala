@@ -1,10 +1,12 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** The one place graft reaches for a `private[sql]` Spark API: wrapping a
-  * Catalyst [[LogicalPlan]] back into a [[DataFrame]]. The workload advisor
+  * Catalyst [[LogicalPlan]] back into a [[DataFrame]], and a Catalyst
+  * [[Expression]] into a [[Column]] (and back). The workload advisor
   * observes Join subtrees inside analyzed plans and must later *profile* a
   * join's child (one key-distribution aggregation over its rows) and *rebuild*
   * the join salted — both need the subtree as a queryable frame, and
@@ -12,10 +14,24 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * library (Delta Lake, Iceberg's Spark runtime) opens the same way: a helper
   * object inside the `org.apache.spark.sql` package hierarchy.
   *
-  * Nothing else may import this from outside `graft.plans` and
-  * `graft.streaming`.
+  * The graft kernels (`graft.functions`) are Catalyst expressions; their
+  * column builders wrap each one with [[column]], so a kernel column needs
+  * no function registry and resolves in any session.
+  *
+  * Nothing else may import this from outside `graft.plans`,
+  * `graft.streaming` and `graft.functions`.
   */
 object PlanBridge {
+
+  /** A [[Column]] that IS the given Catalyst expression (resolved by the
+    * analyzer of whichever session evaluates it). */
+  def column(e: Expression): Column =
+    org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
+  /** The Catalyst expression of a [[Column]] — the child to hand a kernel
+    * expression's constructor. */
+  def expression(c: Column): Expression =
+    org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
   /** `Dataset.ofRows(spark, plan)` — the analyzed/queryable frame for a plan
     * subtree captured from another query's analyzed plan. */

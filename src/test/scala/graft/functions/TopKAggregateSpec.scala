@@ -9,7 +9,7 @@ import graft.SparkSpec
 class TopKAggregateSpec extends SparkSpec {
 
   private def topk(e: org.apache.spark.sql.Column, k: Int) =
-    TopKAggregate.topKMin(spark)(e, k)
+    TopKAggregate.topKMin(e, k)
 
   test("keeps the K smallest per group across many partitions, ascending") {
     // 40 input partitions force real partial buffers + a real merge phase
@@ -49,12 +49,10 @@ class TopKAggregateSpec extends SparkSpec {
     assert(got === Seq(2, 5))
   }
 
-  test("SQL surface: topk_min is registered and matches the window form") {
-    TopKAggregate.install(spark)
+  test("Column builder matches the window form on lineitem") {
     sf("lineitem").createOrReplaceTempView("li_topk")
-    val viaAgg = spark.sql(
-      """SELECT l_returnflag, topk_min(l_extendedprice, 3) AS t
-         FROM li_topk GROUP BY l_returnflag ORDER BY l_returnflag""")
+    val viaAgg = sf("lineitem").groupBy("l_returnflag")
+      .agg(topk(col("l_extendedprice"), 3).as("t")).orderBy("l_returnflag")
       .collect().map(r => (r.getString(0), r.getSeq[java.math.BigDecimal](1)))
     val viaWindow = spark.sql(
       """SELECT l_returnflag, collect_list(l_extendedprice) AS t FROM (

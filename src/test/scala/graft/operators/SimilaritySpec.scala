@@ -119,7 +119,7 @@ class SimilaritySpec extends SparkSpec {
     val centroids = Similarity.trainCentroids(e, "embedding", 8, 5, 10000, 42L)
     val assigned = e.select(col("vec_id").as("neighbor_id"),
         asDouble(col("embedding")).as("__cv"))
-      .withColumn("cell", Similarity.cellExpr(spark, centroids)(col("__cv")))
+      .withColumn("cell", Similarity.cellExpr(centroids)(col("__cv")))
     val cellPath = Similarity.scoreProbed(assigned, q, "vec_id", "embedding",
       k = 5, nprobe = 8, centroids, exactShortcut = false)
       .select("query_id", "neighbor_id").collect()
@@ -131,5 +131,33 @@ class SimilaritySpec extends SparkSpec {
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(full === exact)
+  }
+
+  test("topKTail ranks a NaN similarity like the row_number window it replaced") {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    // an infinite component makes cosine NaN (Inf/Inf), which the window's
+    // sim DESC ranks FIRST; a NaN component makes it null (ranked last)
+    val df = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.9, 0.1)),
+      (3L, Seq(Double.PositiveInfinity, 1.0)), (4L, Seq(Double.NaN, 1.0)),
+      (5L, Seq(-1.0, 0.0))).toDF("id", "vec")
+    val k = 4
+    val viaAgg = Similarity.bruteForceTopK(df, df, "id", "vec", k)
+    val byWindow = Window.partitionBy("query_id")
+      .orderBy(col("sim").desc_nulls_last, col("neighbor_id"))
+    val viaWindow = df.select(col("id").as("neighbor_id"), col("vec").as("__cv"))
+      .join(df.select(col("id").as("query_id"), col("vec").as("__qv")),
+        col("neighbor_id") =!= col("query_id"))
+      .withColumn("sim", graft.functions.NativeVectorExpressions
+        .cosine(col("__qv"), col("__cv")))
+      .withColumn("rank", row_number().over(byWindow))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), round(col("sim"), 6).as("sim"),
+        col("rank"))
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect()
+      .map(r => (r.getLong(0), r.getLong(1), String.valueOf(r.get(2)), r.getInt(3)))
+      .sorted.toSeq
+    assert(rows(viaWindow).exists(_._3 == "NaN"), "fixture must produce a NaN sim")
+    assert(rows(viaAgg) === rows(viaWindow))
   }
 }
